@@ -1,11 +1,24 @@
-"""Iterative graph algorithms as driver-orchestrated DataFrame loops.
+"""Graph algorithms under one size policy: driver-local numpy kernels
+for graphs that fit the driver, driver-orchestrated DataFrame loops
+for the rest.
 
 The reference delegates these to ``scipy.sparse.csgraph`` over a CSR
 adjacency (reference: networkframe/networkframe.py:721-730, 1241-1307,
-1332-1511).  Catalyst cannot express fixpoints, so each algorithm here
-is a driver-side Python loop issuing DataFrame jobs — the classic
-iterative-Spark pattern: cache the loop-carried table, localCheckpoint
-periodically to truncate lineage, check convergence with a cheap action.
+1332-1511).  Most graphs fit the driver many times over, and there a
+loop of small Spark jobs waits on job scheduling, not on data.  So
+PageRank, k-core, connected components (weak and strong), BFS hop
+distances, weighted shortest paths and spectral scores first collect
+the graph once through :func:`_collect_small` — at most
+``_LOCAL_MAX_EDGES`` edge rows (and as many node rows), with the guard
+and the collect in one job — and solve it in numpy, returning one
+``createDataFrame``.  Local kernels reproduce the distributed results
+exactly (PageRank bit for bit, including Spark's decimal rounding).
+
+Above the guard, each algorithm is a driver-side Python loop issuing
+DataFrame jobs — the classic iterative-Spark pattern: cache the
+loop-carried table, localCheckpoint periodically to truncate lineage,
+check convergence with a cheap action.  Algorithms without a local
+kernel always take this path.
 
 Scale notes (100 TB):
 - Loop-carried state is one row per node (labels, frontiers) — small
@@ -21,7 +34,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from typing import Any, Union
+from typing import Any, NamedTuple, Union
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -147,6 +160,104 @@ def _seed_df(frame, node_id: Any) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# driver-local kernels: the one size policy
+# ---------------------------------------------------------------------------
+# Graphs with at most this many edge rows (and node rows) are collected
+# once and solved in numpy on the driver; larger graphs run the
+# distributed loops, the only path for graphs too large for the driver.
+_LOCAL_MAX_EDGES = 2_000_000
+
+
+def _collect_small(df: DataFrame):
+    """``df`` as pandas if it has at most ``_LOCAL_MAX_EDGES`` rows,
+    else None.  Collecting ``limit(max + 1)`` makes the size check and
+    the collect one job; above the guard at most ``max + 1`` rows
+    reach the driver.  Always through Arrow: a row-based limit collect
+    scans partitions in growing rounds of jobs."""
+    import pyarrow as pa
+
+    batches = df.limit(_LOCAL_MAX_EDGES + 1)._collect_as_arrow(
+        empty_list_if_zero_records=False
+    )
+    pdf = pa.Table.from_batches(batches).to_pandas()
+    return None if len(pdf) > _LOCAL_MAX_EDGES else pdf
+
+
+class _LocalGraph(NamedTuple):
+    ids: Any  # node ids (node-table order), or the distinct endpoints
+    src: Any  # int64 positions into ids, one per edge row
+    dst: Any
+    edges: Any  # the collected edge columns (pandas)
+
+
+def _local_graph(frame, *cols, with_nodes: bool = True) -> _LocalGraph | None:
+    """The graph as numpy arrays when it is under the size guard, else
+    None.  ``cols`` are extra edge columns to collect.
+
+    ``with_nodes=False`` skips the node table (one job fewer) and
+    indexes the distinct edge endpoints instead.  Null endpoints, and
+    with nodes also endpoints missing from the node table or duplicate
+    node ids, return None: the distributed path defines those cases."""
+    import numpy as np
+    import pandas as pd
+
+    edges = _collect_small(frame.edges.select("source", "target", *cols))
+    if edges is None:
+        return None
+    s, t = edges["source"].to_numpy(), edges["target"].to_numpy()
+    if with_nodes:
+        nodes = _collect_small(frame.nodes.select("id"))
+        if nodes is None:
+            return None
+        ids = nodes["id"].to_numpy()
+    else:
+        ids = s[:0]
+    n, m = len(ids), len(s)
+    codes, uniques = pd.factorize(np.concatenate([ids, s, t]))
+    if (codes < 0).any():
+        return None
+    if with_nodes:
+        if len(uniques) != n or (codes[:n] != np.arange(n)).any():
+            return None
+    else:
+        ids = np.asarray(uniques)
+    return _LocalGraph(ids, codes[n : n + m], codes[n + m :], edges)
+
+
+def _half_up(x, scale: int, spark):
+    """Per element, the unscaled int64 of
+    ``java.math.BigDecimal.valueOf(x).setScale(scale, HALF_UP)`` — what
+    Spark's ``round(double, scale)`` and ``cast(double as
+    decimal(_, scale))`` compute: HALF_UP on the JVM's decimal string
+    of the double, which can differ from the binary value by half an
+    ulp.  Vectorized: only elements within a few ulps of a rounding
+    tie, where that string decides, ask the JVM for it.
+    Requires ``|x| * 10**scale < 2**50``."""
+    import numpy as np
+
+    x = np.asarray(x, dtype=np.float64)
+    y = np.abs(x) * 10.0**scale
+    fl = np.floor(y)
+    m = np.copysign(fl + (y - fl >= 0.5), x).astype(np.int64)
+    # |y - exact decimal * 10**scale| <= |y| * 2**-52; 16x margin
+    near = np.abs(y - fl - 0.5) <= y * 2.0**-48
+    if near.any():
+        from decimal import ROUND_HALF_UP, Decimal
+
+        to_string = spark._jvm.java.lang.Double.toString
+        for i in np.flatnonzero(near):
+            d = Decimal(to_string(float(x[i]))).scaleb(scale)
+            m[i] = int(d.quantize(Decimal(1), rounding=ROUND_HALF_UP))
+    return m
+
+
+def _round_double(x, scale: int, spark):
+    """Spark's ``round(double, scale)`` over a numpy array: the HALF_UP
+    decimal converted back to the nearest double."""
+    return _half_up(x, scale, spark) / 10.0**scale
+
+
+# ---------------------------------------------------------------------------
 # BFS reachability
 # ---------------------------------------------------------------------------
 def reachable_from(frame, node_id: Any, directed: bool = True) -> DataFrame:
@@ -260,6 +371,44 @@ def k_hop_pair_table(
 # ---------------------------------------------------------------------------
 # connected components
 # ---------------------------------------------------------------------------
+def _union_find_min(s, t):
+    """Weak components of the edge list ``s -> t`` in numpy: returns
+    ``(ids, comp)`` over the distinct endpoints, ``comp`` the min id of
+    each one's component.  Direction- and duplicate-insensitive.
+
+    Vectorized union-find: hook each edge's larger root index onto the
+    smaller + two pointer-doubling compressions per sweep; O(E+V) numpy
+    work per sweep, ~log(depth) sweeps.  pd.factorize is hash-based (no
+    sort) — ~10x cheaper than np.unique(return_inverse) at millions of
+    rows; index order is then arbitrary, so the component-min VALUE is
+    recovered with one np.minimum.at at the end."""
+    import numpy as np
+    import pandas as pd
+
+    codes, uniques = pd.factorize(np.concatenate([s, t]))
+    un = np.asarray(uniques)
+    si, ti = codes[: len(s)], codes[len(s):]
+    parent = np.arange(len(un))
+    while True:
+        rs, rt = parent[si], parent[ti]
+        if len(rs) == 0 or (rs == rt).all():
+            break
+        lo = np.minimum(rs, rt)
+        hi = np.maximum(rs, rt)
+        np.minimum.at(parent, hi, lo)
+        parent = parent[parent]
+        parent = parent[parent]
+    # full path compression
+    while True:
+        nxt = parent[parent]
+        if (nxt == parent).all():
+            break
+        parent = nxt
+    root_min = un.copy()
+    np.minimum.at(root_min, parent, un)
+    return un, root_min[parent]
+
+
 def _local_contract(edges: DataFrame) -> DataFrame:
     """Partition-local union-find: one shuffle-free pass over the edge
     partitions, emitting an ``(id, comp)`` mapping where ``comp`` is the
@@ -287,37 +436,8 @@ def _local_contract(edges: DataFrame) -> DataFrame:
             tgts.append(pdf["target"].to_numpy())
         if not srcs:
             return
-        s = np.concatenate(srcs)
-        t = np.concatenate(tgts)
-        # vectorized union-find: hook each edge's larger root index
-        # onto the smaller + two pointer-doubling compressions per
-        # sweep; O(E+V) numpy work per sweep, ~log(depth) sweeps.
-        # pd.factorize is hash-based (no sort) — ~10x cheaper than
-        # np.unique(return_inverse) at millions of rows; index order is
-        # then arbitrary, so the component-min VALUE is recovered with
-        # one np.minimum.at at the end.
-        codes, uniques = pd.factorize(np.concatenate([s, t]))
-        un = np.asarray(uniques)
-        si, ti = codes[: len(s)], codes[len(s):]
-        parent = np.arange(len(un))
-        while True:
-            rs, rt = parent[si], parent[ti]
-            if len(rs) == 0 or (rs == rt).all():
-                break
-            lo = np.minimum(rs, rt)
-            hi = np.maximum(rs, rt)
-            np.minimum.at(parent, hi, lo)
-            parent = parent[parent]
-            parent = parent[parent]
-        # full path compression
-        while True:
-            nxt = parent[parent]
-            if (nxt == parent).all():
-                break
-            parent = nxt
-        root_min = un.copy()
-        np.minimum.at(root_min, parent, un)
-        yield pd.DataFrame({"id": un, "comp": root_min[parent]})
+        un, comp = _union_find_min(np.concatenate(srcs), np.concatenate(tgts))
+        yield pd.DataFrame({"id": un, "comp": comp})
 
     return edges.mapInPandas(uf, schema)
 
@@ -376,7 +496,9 @@ def _weak_component_min_labels(frame) -> DataFrame:
         # count + one materialization instead of a level per /8).
         # Union-find roots are component minima along any merge order,
         # so the labels are identical whichever ladder is walked.
-        need = max(1, -(-rows // _HIER_MAX_ROWS_PER_PART))  # ceil
+        # coalesce merges adjacent partitions without rebalancing, so
+        # size for half the bound: skewed mappings keep headroom.
+        need = max(1, -(-rows // (_HIER_MAX_ROWS_PER_PART // 2)))  # ceil
         if need > step:
             break
         parts = max(1, min(step, need))
@@ -499,9 +621,6 @@ def _max_label_fixpoint(e: DataFrame, init: DataFrame, label: str) -> DataFrame:
     return labels
 
 
-_SCC_LOCAL_MAX_EDGES = 2_000_000
-
-
 def _scc_local(src, dst, node_ids):
     """Driver-local iterative Tarjan over numpy-indexed edges — the
     same role as the reference's direct scipy call
@@ -571,14 +690,14 @@ def _scc_local(src, dst, node_ids):
 def _strong_component_min_labels(frame) -> DataFrame:
     """(id, comp) for strongly connected components, comp = min member.
 
-    Below ``_SCC_LOCAL_MAX_EDGES`` distinct edges the graph is
-    collected and solved with an iterative driver-local Tarjan —
-    exactly the reference's own strategy (scipy.csgraph,
-    networkframe.py:721-730): Tarjan is inherently sequential, and the
-    data-parallel alternative below is diameter-bound.
+    The distributed path; :func:`connected_component_labels` solves
+    graphs under ``_LOCAL_MAX_EDGES`` with the driver-local Tarjan
+    (:func:`_scc_local`) instead — exactly the reference's own strategy
+    (scipy.csgraph, networkframe.py:721-730): Tarjan is inherently
+    sequential, and the data-parallel alternative below is
+    diameter-bound.
 
-    Above the guard: Forward-Backward coloring (Orzan's FB family).
-    Per peel round:
+    Forward-Backward coloring (Orzan's FB family).  Per peel round:
     1. color(v) = max id that reaches v (max-propagation + transitive
        shortcut, ~log diameter rounds).  A root r has color(r) == r.
     2. M(v) = max id reachable FROM v over same-color edges only, same
@@ -589,22 +708,6 @@ def _strong_component_min_labels(frame) -> DataFrame:
        the remainder — rounds = DAG peeling depth, not #SCCs.
     """
     fwd = frame.edges.select("source", "target").distinct().cache()
-    if fwd.count() <= _SCC_LOCAL_MAX_EDGES:
-        import numpy as np
-        import pandas as pd
-
-        epdf = fwd.toPandas()
-        fwd.unpersist()
-        ids = frame.nodes.select("id").toPandas()["id"].to_numpy()
-        pos = {v: i for i, v in enumerate(ids)}
-        src = np.fromiter(
-            (pos[v] for v in epdf["source"]), dtype=np.int64, count=len(epdf)
-        )
-        dst = np.fromiter(
-            (pos[v] for v in epdf["target"]), dtype=np.int64, count=len(epdf)
-        )
-        comp = _scc_local(src, dst, ids)
-        return frame.spark.createDataFrame(pd.DataFrame({"id": ids, "comp": comp}))
     remaining = frame.nodes.select("id").localCheckpoint(eager=True)
     results: list[DataFrame] = []
     for outer in range(_MAX_ITER):
@@ -647,6 +750,39 @@ def _strong_component_min_labels(frame) -> DataFrame:
     return out
 
 
+def _component_labels_local(frame, g: _LocalGraph, strong: bool) -> DataFrame:
+    """Driver-local twin of :func:`connected_component_labels`: union-find
+    (weak) or Tarjan (strong) over the collected graph, then the same
+    dense renumbering by (size desc, min member id asc)."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    ids = g.ids
+    if strong:
+        n = len(ids)
+        key = np.unique(g.src * n + g.dst)
+        comp = np.asarray(_scc_local(key // n, key % n, ids))
+    else:
+        comp = ids.copy()
+        if len(g.src):
+            un, root = _union_find_min(ids[g.src], ids[g.dst])
+            comp[pd.Index(ids).get_indexer(un)] = root
+    key, mins = pd.factorize(comp)
+    size = np.bincount(key, minlength=len(mins))
+    by_min = np.argsort(np.argsort(mins, kind="stable"), kind="stable")
+    rank = np.empty(len(mins), dtype=np.int64)
+    rank[np.lexsort((by_min, -size))] = np.arange(len(mins))
+    schema = T.StructType(
+        [
+            T.StructField("id", frame.nodes.schema["id"].dataType),
+            T.StructField("component", T.IntegerType()),
+        ]
+    )
+    pdf = pd.DataFrame({"id": ids, "component": rank[key].astype(np.int32)})
+    return frame.spark.createDataFrame(pdf, schema=schema)
+
+
 def connected_component_labels(
     frame, directed: bool = True, connection: str = "weak"
 ) -> DataFrame:
@@ -655,14 +791,18 @@ def connected_component_labels(
 
     scipy's label numbering (reference networkframe.py:721-730) is an
     internal artifact; this deterministic renumbering makes labels
-    stable across runs and engines for comparison.
+    stable across runs and engines for comparison.  Graphs under
+    ``_LOCAL_MAX_EDGES`` are labelled on the driver
+    (:func:`_component_labels_local`); larger ones by the distributed
+    loops below.
     """
     if connection not in ("weak", "strong"):
         raise ValueError("connection must be 'weak' or 'strong'")
-    if not directed or connection == "weak" or not frame.directed:
-        raw = _weak_component_min_labels(frame)
-    else:
-        raw = _strong_component_min_labels(frame)
+    strong = directed and connection == "strong" and frame.directed
+    g = _local_graph(frame)
+    if g is not None:
+        return _component_labels_local(frame, g, strong)
+    raw = _strong_component_min_labels(frame) if strong else _weak_component_min_labels(frame)
     sizes = raw.groupBy("comp").agg(F.count(F.lit(1)).alias("n"))
     numbered = _dense_rank_distributed(
         sizes, [F.desc("n"), F.asc("comp")], out_col="component"
@@ -837,19 +977,27 @@ def k_hop_aggregation(
 # ---------------------------------------------------------------------------
 # spectral ordering
 # ---------------------------------------------------------------------------
-def _spectral_scores_local(ids_pdf, edges_pdf, sigma, max_iter, tol):
+def _spectral_scores_local(ids, edges_pdf, sigma, max_iter, tol):
     """Driver-local power iteration over a collected COO adjacency —
     the small-graph escape hatch (same role as the reference's direct
     scipy ``eigsh`` call, networkframe.py:1546).  Identical update rule
-    to the distributed loop: v <- normalize(A·v + sigma·v)."""
+    to the distributed loop: v <- normalize(A·v + sigma·v).  Entries
+    whose endpoints are not node ids drop out, as in the distributed
+    joins."""
     import numpy as np
+    import pandas as pd
 
-    ids = ids_pdf["id"].to_numpy()
-    pos = {v: i for i, v in enumerate(ids)}
     n = len(ids)
-    src = np.fromiter((pos[v] for v in edges_pdf["source"]), dtype=np.int64)
-    dst = np.fromiter((pos[v] for v in edges_pdf["target"]), dtype=np.int64)
-    w = edges_pdf["weight"].to_numpy(dtype=np.float64)
+    m = len(edges_pdf)
+    codes, _ = pd.factorize(
+        np.concatenate(
+            [ids, edges_pdf["source"].to_numpy(), edges_pdf["target"].to_numpy()]
+        )
+    )
+    src, dst = codes[n : n + m], codes[n + m :]
+    ok = (src >= 0) & (src < n) & (dst >= 0) & (dst < n)
+    src, dst = src[ok], dst[ok]
+    w = edges_pdf["weight"].to_numpy(dtype=np.float64)[ok]
     v = np.full(n, 1.0 / (n ** 0.5))
     prev_dot = None
     for _ in range(max_iter):
@@ -866,10 +1014,7 @@ def _spectral_scores_local(ids_pdf, edges_pdf, sigma, max_iter, tol):
         if prev_dot is not None and abs(dot - 1.0) < tol:
             break
         prev_dot = dot
-    return ids, v
-
-
-_SPECTRAL_LOCAL_MAX_NODES = 100_000
+    return v
 
 
 def spectral_scores(
@@ -879,12 +1024,12 @@ def spectral_scores(
     via power iteration (reference: networkframe.py:1540-1549 uses
     ``eigsh(adj + adj.T, k=1, "LM")``).
 
-    Below ``_SPECTRAL_LOCAL_MAX_NODES`` nodes the aggregated adjacency
-    is collected and iterated driver-side in numpy (per-iteration
-    driver/executor round-trips dominate at small n); above it, each
-    round is one join + hash aggregate (v <- A·v) and a scalar norm
-    collect.  Eigenvector sign is not pinned (matches the reference's
-    eigsh, which is also sign-ambiguous).
+    Below ``_LOCAL_MAX_EDGES`` aggregated adjacency entries (and node
+    rows) the adjacency is collected and iterated driver-side in numpy
+    (per-iteration driver/executor round-trips dominate there); above
+    it, each round is one join + hash aggregate (v <- A·v) and a scalar
+    norm collect.  Eigenvector sign is not pinned (matches the
+    reference's eigsh, which is also sign-ambiguous).
     """
     agg = frame.aggregated_edges(weight_col=weight_col)
     sym = (
@@ -897,29 +1042,34 @@ def spectral_scores(
         )
         .groupBy("source", "target")
         .agg(F.sum("weight").alias("weight"))
-    ).cache()
-    ids = frame.nodes.select("id").localCheckpoint(eager=True)
-    n = ids.count()
-    if n == 0:
-        return ids.select("id", F.lit(0.0).alias("spectral_score"))
+    )
     # Diagonal shift sigma = max absolute row sum makes A + sigma*I PSD,
     # so power iteration converges even on bipartite graphs (where A's
     # extreme eigenvalues are +/-lambda and the unshifted iteration
     # oscillates).  The shift changes eigenvalues, not eigenvectors.
+    sym_pdf = _collect_small(sym)
+    ids_pdf = None if sym_pdf is None else _collect_small(frame.nodes.select("id"))
+    if ids_pdf is not None:
+        import pandas as pd
+
+        ids = ids_pdf["id"].to_numpy()
+        if len(ids) == 0:
+            return frame.nodes.select("id", F.lit(0.0).alias("spectral_score"))
+        row_abs = sym_pdf["weight"].abs().groupby(sym_pdf["source"]).sum()
+        sigma = (float(row_abs.max()) if len(row_abs) else 0.0) or 1.0
+        vec = _spectral_scores_local(ids, sym_pdf, sigma, max_iter, tol)
+        return frame.spark.createDataFrame(
+            pd.DataFrame({"id": ids, "spectral_score": vec})
+        )
+    sym = sym.cache()
+    ids = frame.nodes.select("id").localCheckpoint(eager=True)
+    n = ids.count()
+    if n == 0:
+        return ids.select("id", F.lit(0.0).alias("spectral_score"))
     sigma = (
         sym.groupBy("source").agg(F.sum(F.abs(F.col("weight"))).alias("s"))
         .agg(F.max("s")).collect()[0][0]
     ) or 1.0
-    if n <= _SPECTRAL_LOCAL_MAX_NODES:
-        import pandas as pd
-
-        node_ids, vec = _spectral_scores_local(
-            ids.toPandas(), sym.toPandas(), float(sigma), max_iter, tol
-        )
-        sym.unpersist()
-        return frame.spark.createDataFrame(
-            pd.DataFrame({"id": node_ids, "spectral_score": vec})
-        )
     v = ids.select("id", F.lit(1.0 / (n ** 0.5)).alias("v")).localCheckpoint(eager=True)
     prev_dot = None
     for it in range(max_iter):
@@ -1017,8 +1167,16 @@ def pagerank(
     non-negative weights).  Each round rounds to 12 dp, so results are
     bit-reproducible across engines, run-to-run and at any parallelism.
     Per-round lazy checkpoints keep lineage O(1) in ``n_iter``.
+
+    Graphs under ``_LOCAL_MAX_EDGES`` run :func:`_pagerank_local`, which
+    repeats this arithmetic in numpy and returns bit-identical ranks.
     """
     nodes = frame.nodes.select("id")
+    g = _local_graph(frame, F.col(weight_col).alias("w")) if weight_col else _local_graph(frame)
+    if g is not None and len(g.ids):
+        out = _pagerank_local(frame, g, damping, n_iter, weight_col, personalize)
+        if out is not None:
+            return out
     n = len(frame)
     if n == 0:
         return nodes.select("id", F.lit(0.0).alias("pagerank"))
@@ -1045,7 +1203,7 @@ def pagerank(
     # broadcasts at this scale, so the share side is never shuffled
     # per round and the extra repartition + columnar cache build are
     # pure cost; the unweighted path keeps the RDD-scoped checkpoint.
-    # Cache is per-query scope; bench/callers clear it.
+    # The cached table is released once the result is materialized.
     e = edges.join(out_w, on="source").select(
         "source", "target", (F.col("w") / F.col("w_out")).alias("share")
     )
@@ -1096,7 +1254,92 @@ def pagerank(
             )
             .localCheckpoint(eager=False)
         )
-    return pr.select("id", F.round("pr", 6).alias("pagerank"))
+    out = pr.select("id", F.round("pr", 6).alias("pagerank"))
+    if weight_col is not None:
+        # materialize before releasing the cached share table
+        out = out.localCheckpoint(eager=True)
+        e.unpersist()
+    return out
+
+
+def _edge_decimal6(w, spark):
+    """Spark's ``cast(w as decimal(28,6))`` of a collected weight
+    column as unscaled int64, or None where the local kernel would not
+    be exact: non-numeric or missing weights, or weights whose 6-dp
+    sums could leave the range where doubles are exact."""
+    import numpy as np
+    import pandas as pd
+
+    if pd.api.types.is_integer_dtype(w.dtype):
+        v = w.to_numpy(dtype=np.int64)
+        if len(v) and np.abs(v).max() > 10**9:
+            return None
+        return v * 10**6
+    if not pd.api.types.is_float_dtype(w.dtype):
+        return None
+    v = w.to_numpy(dtype=np.float64)
+    if not np.isfinite(v).all() or (len(v) and np.abs(v).max() > 1e9):
+        return None
+    return _half_up(v, 6, spark)
+
+
+def _pagerank_local(frame, g: _LocalGraph, damping, n_iter, weight_col, personalize):
+    """:func:`pagerank` on the collected graph, bit-identical to the
+    distributed plan: the same double expressions in the same order,
+    contributions floored to 1e-18-scaled int64 and summed as integers,
+    and Spark's decimal rounding (``cast(decimal(28,6))`` of weights,
+    ``round(_, 12)`` per round, ``round(_, 6)`` at the end) reproduced
+    by :func:`_half_up`.  Returns None when the weights fall outside
+    what it reproduces exactly (see :func:`_edge_decimal6`)."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    spark = frame.spark
+    n = len(g.ids)
+    if weight_col is None:
+        w = np.ones(len(g.src))
+        q = np.full(len(g.src), 10**6, dtype=np.int64)
+    else:
+        q = _edge_decimal6(g.edges["w"], spark)
+        if q is None:
+            return None
+        w = q / 1e6
+        # the out-weight sum re-casts the quantized double, as the plan does
+        q = _half_up(w, 6, spark)
+    if np.abs(q).sum() >= 2**53:
+        return None
+    q_out = np.zeros(n, dtype=np.int64)
+    np.add.at(q_out, g.src, q)
+    w_out = q_out / 1e6
+    if (w_out[g.src] == 0).any():
+        return None
+    order = np.argsort(g.dst, kind="stable")
+    src = g.src[order]
+    share = (w / w_out[g.src])[order]
+    targets, starts = np.unique(g.dst[order], return_index=True)
+    if personalize is None:
+        base = (1.0 - damping) / n
+        pr = np.full(n, 1.0 / n)
+    else:
+        k = len(personalize)
+        seeds = pd.Series(g.ids).isin(list(personalize)).to_numpy()
+        base = np.where(seeds, (1.0 - damping) / k, 0.0)
+        pr = np.where(seeds, 1.0 / k, 0.0)
+    for _ in range(n_iter):
+        c = np.floor(pr[src] * share * 1e18).astype(np.int64)
+        acc = np.zeros(n, dtype=np.int64)
+        if len(c):
+            acc[targets] = np.add.reduceat(c, starts)
+        pr = _round_double(base + damping * (acc / 1e18), 12, spark)
+    schema = T.StructType(
+        [
+            T.StructField("id", frame.nodes.schema["id"].dataType),
+            T.StructField("pagerank", T.DoubleType()),
+        ]
+    )
+    pdf = pd.DataFrame({"id": g.ids, "pagerank": _round_double(pr, 6, spark)})
+    return spark.createDataFrame(pdf, schema=schema)
 
 
 def triangle_counts(frame) -> DataFrame:
@@ -1161,38 +1404,43 @@ def triangle_counts(frame) -> DataFrame:
     )
 
 
-_BFS_LOCAL_MAX_EDGES = 2_000_000
+def _local_seeded(frame, edges, node_id: Any, directed: bool):
+    """Index a collected edge table plus the seed ids for a
+    single-source local kernel: ``(ids, src, dst, seeds, rows)``, with
+    both orientations when undirected and ``rows`` the edge row behind
+    each (src, dst).  None on a null id (the distributed path defines
+    that case)."""
+    import numpy as np
+    import pandas as pd
+
+    seeds = _seed_df(frame, node_id).toPandas()["id"].to_numpy()
+    s, t = edges["source"].to_numpy(), edges["target"].to_numpy()
+    rows = np.arange(len(s))
+    if not directed:
+        s, t = np.concatenate([s, t]), np.concatenate([t, s])
+        rows = np.concatenate([rows, rows])
+    k, m = len(seeds), len(s)
+    codes, ids = pd.factorize(np.concatenate([seeds, s, t]))
+    if (codes < 0).any():
+        return None
+    return np.asarray(ids), codes[k : k + m], codes[k + m :], codes[:k], rows
 
 
-def _bfs_local(frame, pairs: DataFrame, node_id: Any, max_hops: int | None) -> DataFrame:
-    """Driver-local vectorized BFS over a collected pair table.
-
-    Ids map to dense positions via a sorted-unique table (works for
-    int and string ids alike); each hop gathers all frontier
-    adjacency ranges with one repeat/arange construction — no Python
-    per-node loop."""
+def _bfs_local(frame, ids, src, dst, seeds, max_hops: int | None) -> DataFrame:
+    """Driver-local vectorized BFS over the indexed edges; each hop
+    gathers all frontier adjacency ranges with one repeat/arange
+    construction — no Python per-node loop."""
     import numpy as np
     import pandas as pd
 
     from pyspark.sql import types as T
 
-    epdf = pairs.toPandas()
-    seeds = np.asarray(
-        [r["id"] for r in _seed_df(frame, node_id).collect()]
-    )
-    ids = np.unique(
-        np.concatenate(
-            [epdf["source"].to_numpy(), epdf["target"].to_numpy(), seeds]
-        )
-    )
     n = len(ids)
-    src = np.searchsorted(ids, epdf["source"].to_numpy())
-    dst = np.searchsorted(ids, epdf["target"].to_numpy())
     order = np.argsort(src, kind="stable")
     ss, dd = src[order], dst[order]
     bounds = np.searchsorted(ss, np.arange(n + 1))
     dist = np.full(n, -1, dtype=np.int64)
-    frontier = np.unique(np.searchsorted(ids, seeds))
+    frontier = np.unique(seeds)
     dist[frontier] = 0
     limit = _MAX_ITER if max_hops is None else max_hops
     d = 0
@@ -1242,18 +1490,18 @@ def hop_distances(
     to it, and the single action per round is the frontier count.
     Rounds are bounded by graph diameter (or ``max_hops``).
     """
+    edges_pdf = _collect_small(frame.edges.select("source", "target"))
+    loc = None if edges_pdf is None else _local_seeded(frame, edges_pdf, node_id, directed)
+    if loc is not None:
+        # the one size policy (and the reference's own scipy
+        # shortest_path, networkframe.py:962-998): a frontier loop costs
+        # one fixed-overhead Spark job per hop (diameter x ~0.5s
+        # dominates small graphs), while a vectorized local BFS on the
+        # collected edges is milliseconds.  The distributed loop below
+        # stays the path for genuinely large graphs.
+        ids, src, dst, seeds, _ = loc
+        return _bfs_local(frame, ids, src, dst, seeds, max_hops)
     pairs = _edge_pairs(frame, directed, partition_by_source=True).cache()
-    if pairs.count() <= _BFS_LOCAL_MAX_EDGES:
-        # same guarded driver-local strategy as SCC/spectral (and the
-        # reference's own scipy shortest_path, networkframe.py:962-998):
-        # a frontier loop costs one fixed-overhead Spark job per hop
-        # (diameter x ~0.5s dominates small graphs), while a vectorized
-        # local BFS on the collected pair table is milliseconds.  The
-        # distributed loop below stays the path for genuinely large
-        # graphs.
-        out = _bfs_local(frame, pairs, node_id, max_hops)
-        pairs.unpersist()
-        return out
     edges = pairs  # already hash-partitioned on source by _edge_pairs
     seed = (
         _seed_df(frame, node_id)
@@ -1305,11 +1553,55 @@ def hop_distances(
     return out
 
 
+def _k_core_local(frame, g: _LocalGraph, k: int, max_iter: int) -> DataFrame:
+    """:func:`k_core` on the collected edges, with the same synchronous
+    peel schedule — every round drops all nodes of degree < k at once —
+    so rounds (and the non-convergence error) match the distributed
+    loop."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    n = len(g.ids)
+    loop = g.src != g.dst
+    lo = np.minimum(g.src, g.dst)[loop]
+    hi = np.maximum(g.src, g.dst)[loop]
+    key = np.unique(lo * n + hi)
+    u, v = key // n, key % n
+    for _ in range(max_iter):
+        deg = np.bincount(u, minlength=n) + np.bincount(v, minlength=n)
+        drop = (deg > 0) & (deg < k)
+        if not drop.any():
+            break
+        keep = ~(drop[u] | drop[v])
+        u, v = u[keep], v[keep]
+    else:
+        raise _k_core_unconverged(k, max_iter)
+    present = deg > 0
+    schema = T.StructType(
+        [
+            T.StructField("id", frame.edges.schema["source"].dataType),
+            T.StructField("core_degree", T.LongType()),
+        ]
+    )
+    pdf = pd.DataFrame({"id": g.ids[present], "core_degree": deg[present]})
+    return frame.spark.createDataFrame(pdf, schema=schema)
+
+
+def _k_core_unconverged(k: int, max_iter: int) -> RuntimeError:
+    return RuntimeError(
+        f"k_core({k}): peeling did not converge in max_iter={max_iter} "
+        "rounds; the surviving nodes are not a core — raise max_iter"
+    )
+
+
 def k_core(frame, k: int, max_iter: int = 50) -> DataFrame:
     """The k-core of the undirected simple projection: iteratively
     peel nodes of degree < k until fixpoint; returns ``(id,
     core_degree)`` for the surviving nodes (degree counted inside the
-    core).
+    core).  Raises ``RuntimeError`` when ``max_iter`` synchronous peel
+    rounds end before the fixpoint (a round that removes nothing) —
+    the survivors would not be a core.
 
     Scale-extension operator (no reference counterpart; SURVEY §2.11).
     The k-core is the unique maximal subgraph with min degree >= k, so
@@ -1317,15 +1609,20 @@ def k_core(frame, k: int, max_iter: int = 50) -> DataFrame:
     to the same set, which is what makes the result oracle-checkable
     by an unrolled fixed-iteration SQL twin.
 
-    Scale design: each round is one partial+final hash aggregate
-    (degrees) and two semi-joins (drop adjacency rows whose endpoint
-    was peeled) — all keyed equi-joins on the node id, uniform
-    shuffles.  The adjacency is halved rows-per-round in the worst
-    case and lazily checkpointed, so lineage stays O(1); the per-round
-    action is a single count used both for convergence and to
-    materialize the checkpoint.  Rounds are bounded by the peel depth
-    (<= max core number steps, typically << diameter).
+    Graphs under ``_LOCAL_MAX_EDGES`` peel in numpy
+    (:func:`_k_core_local`).  Distributed design: each round is one
+    partial+final hash aggregate (degrees) and two semi-joins (drop
+    adjacency rows whose endpoint was peeled) — all keyed equi-joins on
+    the node id, uniform shuffles.  The adjacency is halved
+    rows-per-round in the worst case and lazily checkpointed, so
+    lineage stays O(1); the per-round action is a single count used
+    both for convergence and to materialize the checkpoint.  Rounds
+    are bounded by the peel depth (<= max core number steps, typically
+    << diameter).
     """
+    g = _local_graph(frame, with_nodes=False)
+    if g is not None:
+        return _k_core_local(frame, g, k, max_iter)
     e = frame.edges.select("source", "target").filter(
         F.col("source") != F.col("target")
     )
@@ -1358,6 +1655,8 @@ def k_core(frame, k: int, max_iter: int = 50) -> DataFrame:
         if n2 == n_rows:
             break
         n_rows = n2
+    else:
+        raise _k_core_unconverged(k, max_iter)
     return (
         nb.groupBy("id")
         .agg(F.count(F.lit(1)).alias("core_degree"))
@@ -1581,29 +1880,19 @@ def local_clustering(frame) -> DataFrame:
     )
 
 
-def _bellman_ford_local(
-    frame, e: DataFrame, node_id: Any, max_rounds: int
-) -> DataFrame:
-    """Driver-local synchronous relaxation over the collected minified
-    edge table; each round is one vectorized ``np.minimum.at`` scatter
-    — exact same bounded-round semantics as the distributed loop."""
+def _bellman_ford_local(frame, ids, src, dst, w, seeds, max_rounds: int) -> DataFrame:
+    """Driver-local synchronous relaxation over the indexed edges; each
+    round is one vectorized ``np.minimum.at`` scatter — exact same
+    bounded-round semantics as the distributed loop.  Parallel edges
+    need no collapsing: ``dist + w`` is monotone in ``w``, so the min
+    over a pair's edges equals the distributed path's ``dist + min(w)``."""
     import numpy as np
     import pandas as pd
 
     from pyspark.sql import types as T
 
-    epdf = e.toPandas()
-    seeds = np.asarray([r["id"] for r in _seed_df(frame, node_id).collect()])
-    ids = np.unique(
-        np.concatenate(
-            [epdf["source"].to_numpy(), epdf["target"].to_numpy(), seeds]
-        )
-    )
-    src = np.searchsorted(ids, epdf["source"].to_numpy())
-    dst = np.searchsorted(ids, epdf["target"].to_numpy())
-    w = epdf["w"].to_numpy(dtype=np.float64)
     dist = np.full(len(ids), np.inf)
-    dist[np.searchsorted(ids, seeds)] = 0.0
+    dist[seeds] = 0.0
     for _ in range(max_rounds):
         cand = dist[src] + w
         new = dist.copy()
@@ -1655,6 +1944,21 @@ def shortest_paths(
     comparison on the changed set; rounds are bounded by the weighted
     hop diameter.
     """
+    import numpy as np
+
+    edges_pdf = _collect_small(
+        frame.edges.select("source", "target", F.col(weight_col).alias("w"))
+    )
+    loc = None if edges_pdf is None else _local_seeded(frame, edges_pdf, node_id, directed)
+    if loc is not None:
+        # the one size policy: R numpy scatter-min relaxation rounds are
+        # bit-equal to the distributed sync rounds — min is
+        # order-independent and the per-candidate float add is identical
+        ids, src, dst, seeds, rows = loc
+        w = edges_pdf["w"].to_numpy(dtype=np.float64)[rows]
+        # a null weight never relaxes anything (min ignores nulls)
+        ok = ~np.isnan(w)
+        return _bellman_ford_local(frame, ids, src[ok], dst[ok], w[ok], seeds, max_rounds)
     if directed:
         e = frame.edges.select("source", "target", F.col(weight_col).alias("w"))
     else:
@@ -1672,17 +1976,9 @@ def shortest_paths(
     e = (
         e.groupBy("source", "target")
         .agg(F.min("w").alias("w"))
+        .repartition("source")
         .cache()
     )
-    if e.count() <= _BFS_LOCAL_MAX_EDGES:
-        # guarded local twin (same policy as hop_distances/SCC): R
-        # numpy scatter-min relaxation rounds are bit-equal to the
-        # distributed sync rounds — min is order-independent and the
-        # per-candidate float add is identical
-        out = _bellman_ford_local(frame, e, node_id, max_rounds)
-        e.unpersist()
-        return out
-    e = e.repartition("source").cache()
     dist = (
         _seed_df(frame, node_id)
         .select("id", F.lit(0.0).alias("dist"))
@@ -1952,7 +2248,12 @@ def pagerank_personalized_batch(
             .filter(F.col("pr") > 0)
             .localCheckpoint(eager=False)
         )
-    return pr.select("seed", "id", F.round("pr", 6).alias("pagerank"))
+    # materialize before releasing the cached share table
+    out = pr.select("seed", "id", F.round("pr", 6).alias("pagerank")).localCheckpoint(
+        eager=True
+    )
+    e.unpersist()
+    return out
 
 
 def hits(frame, n_iter: int = 3, directed: bool = True) -> DataFrame:

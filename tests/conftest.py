@@ -82,3 +82,12 @@ def readme_frame(spark):
         "source long, target long, weight long",
     )
     return NetworkFrame(nodes, edges)
+
+
+@pytest.fixture()
+def distributed(monkeypatch):
+    """Run graph algorithms on their distributed loops: no graph is
+    under the driver-local kernels' size guard."""
+    from networkframe_spark import algorithms
+
+    monkeypatch.setattr(algorithms, "_LOCAL_MAX_EDGES", 0)

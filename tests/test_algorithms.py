@@ -34,6 +34,10 @@ def test_weak_components(two_component_frame):
     assert labels[0] == 0 and labels[3] == 1 and labels[5] == 2
 
 
+def test_weak_components_distributed(two_component_frame, distributed):
+    test_weak_components(two_component_frame)
+
+
 def test_n_connected_components(two_component_frame):
     assert two_component_frame.n_connected_components(connection="weak") == 3
     assert not two_component_frame.is_fully_connected()
@@ -53,6 +57,10 @@ def test_strong_components(spark):
     assert labels[0] != labels[3]
 
 
+def test_strong_components_distributed(spark, distributed):
+    test_strong_components(spark)
+
+
 def test_strong_components_dag(spark):
     # DAG: every node its own SCC
     nodes = spark.createDataFrame([(i,) for i in range(4)], "id long")
@@ -64,13 +72,13 @@ def test_strong_components_dag(spark):
 
 def test_strong_components_distributed_fb_path(spark, monkeypatch):
     """Force the distributed Forward-Backward SCC path (normally gated
-    behind _SCC_LOCAL_MAX_EDGES) on a graph that stresses its fixpoint:
+    behind _LOCAL_MAX_EDGES) on a graph that stresses its fixpoint:
     a 40-cycle (worst case for plain label propagation — pointer
     jumping must converge in ~log rounds, not 40), a DAG tail hanging
     off it, and a separate 2-cycle."""
     from networkframe_spark import algorithms
 
-    monkeypatch.setattr(algorithms, "_SCC_LOCAL_MAX_EDGES", 0)
+    monkeypatch.setattr(algorithms, "_LOCAL_MAX_EDGES", 0)
     n = 40
     cycle = [(i, (i + 1) % n) for i in range(n)]
     tail = [(0, 100), (100, 101), (101, 102)]
@@ -377,7 +385,7 @@ def test_hop_distances_distributed_path(spark, monkeypatch):
             r["id"]: r["dist"]
             for r in nf.hop_distances(0, directed=directed).collect()
         }
-        monkeypatch.setattr(algorithms, "_BFS_LOCAL_MAX_EDGES", 0)
+        monkeypatch.setattr(algorithms, "_LOCAL_MAX_EDGES", 0)
         dist = {
             r["id"]: r["dist"]
             for r in nf.hop_distances(0, directed=directed).collect()
@@ -385,7 +393,7 @@ def test_hop_distances_distributed_path(spark, monkeypatch):
         monkeypatch.undo()
         assert dist == local, directed
     # sanity on the actual values (directed)
-    monkeypatch.setattr(algorithms, "_BFS_LOCAL_MAX_EDGES", 0)
+    monkeypatch.setattr(algorithms, "_LOCAL_MAX_EDGES", 0)
     got = {r["id"]: r["dist"] for r in nf.hop_distances(0).collect()}
     assert got == {0: 0, 1: 1, 2: 2, 5: 2, 3: 3, 4: 4}
 
@@ -404,6 +412,22 @@ def test_k_core(spark):
     got = {r["id"]: r["core_degree"] for r in nf.k_core(2).collect()}
     assert got == {0: 2, 1: 2, 2: 2}
     assert nf.k_core(3).count() == 0
+    # a path of n nodes has an empty 2-core, reached after n/2 peel
+    # rounds (plus one that removes nothing): max_iter rounds that end
+    # before the fixpoint raise instead of returning a non-core
+    def path(n):
+        return NetworkFrame(
+            spark.createDataFrame([(i,) for i in range(n)], "id long"),
+            spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "source long, target long"),
+        )
+
+    with pytest.raises(RuntimeError, match="did not converge"):
+        path(200).k_core(2)
+    assert path(20).k_core(2).count() == 0
+
+
+def test_k_core_distributed(spark, distributed):
+    test_k_core(spark)
 
 
 def test_link_prediction(spark):
@@ -460,6 +484,10 @@ def test_pagerank_personalized(spark):
     # uniform pagerank differs: node 3 gets base mass
     pu = {r["id"]: r["pagerank"] for r in nf.pagerank(n_iter=5).collect()}
     assert pu[3] > 0.0
+
+
+def test_pagerank_personalized_distributed(spark, distributed):
+    test_pagerank_personalized(spark)
 
 
 def test_local_clustering(spark):
@@ -584,7 +612,7 @@ def test_shortest_paths_distributed_matches_local(spark, monkeypatch):
             (r["id"], r["dist"])
             for r in nf.shortest_paths(0, directed=directed).collect()
         )
-        monkeypatch.setattr(algorithms, "_BFS_LOCAL_MAX_EDGES", 0)
+        monkeypatch.setattr(algorithms, "_LOCAL_MAX_EDGES", 0)
         dist = sorted(
             (r["id"], r["dist"])
             for r in nf.shortest_paths(0, directed=directed).collect()
@@ -1301,6 +1329,81 @@ def test_pagerank_personalized_batch_equals_per_seed_calls(spark):
             if r["pagerank"] > 0:
                 want[(s, r["id"])] = r["pagerank"]
     assert got == want and len(want) > 3 * 5  # non-trivial spread
+
+
+def _local_kernel_frame(spark):
+    """String-id multigraph with parallel edges, self-loops and
+    dangling nodes (no out-edges), weights at ties of the 6-dp cast."""
+    import random
+
+    rnd = random.Random(7)
+    ids = [f"v{i:02d}" for i in range(60)]
+    edges = []
+    for _ in range(400):
+        a = ids[min(int(rnd.paretovariate(1.3)) - 1, 59)]
+        b = rnd.choice(ids[:55])  # v55..v59 receive nothing
+        edges.append((a, b, rnd.choice([0.5, 1.25, 2.0000005, 3.3, 7.0])))
+    edges += [("v00", "v00", 1.0), ("v03", "v03", 2.5), ("v01", "v02", 4.0)] * 2
+    nodes = spark.createDataFrame([(i,) for i in ids], "id string")
+    return NetworkFrame(
+        nodes, spark.createDataFrame(edges, "source string, target string, weight double")
+    )
+
+
+def test_local_kernels_equal_distributed_loops(spark, monkeypatch):
+    """Below the size guard, pagerank (unweighted, weighted,
+    personalized), k_core and weak component labels come from the
+    driver-local kernels; with the guard forced to 0 from the
+    distributed loops.  Both give the same rows, pagerank bit for
+    bit."""
+    from networkframe_spark import algorithms
+
+    nf = _local_kernel_frame(spark)
+    calls = {
+        "pagerank": lambda: nf.pagerank(n_iter=6),
+        "weighted": lambda: nf.pagerank(n_iter=6, weight_col="weight"),
+        "personalized": lambda: nf.pagerank(n_iter=6, personalize=["v01", "v30", "zz"]),
+        "k_core": lambda: nf.k_core(4),
+        "components": lambda: nf.component_labels(connection="weak"),
+    }
+    local = {name: sorted(map(tuple, f().collect())) for name, f in calls.items()}
+    monkeypatch.setattr(algorithms, "_LOCAL_MAX_EDGES", 0)
+    for name, f in calls.items():
+        assert sorted(map(tuple, f().collect())) == local[name], name
+    assert len(local["pagerank"]) == 60 and len(local["k_core"]) > 5
+    assert len({c for _, c in local["components"]}) > 1
+
+
+def test_local_kernels_job_count(spark):
+    """Below the guard each call, including collecting its result, runs
+    at most 3 Spark jobs (edge collect, node collect, result)."""
+    nf = _local_kernel_frame(spark)
+    sc = spark.sparkContext
+    calls = {
+        "pagerank": lambda: nf.pagerank(n_iter=10),
+        "k_core": lambda: nf.k_core(3),
+        "components": lambda: nf.component_labels(connection="weak"),
+    }
+    for name, f in calls.items():
+        group = f"local-kernel-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            f().collect()
+        finally:
+            sc.setJobGroup("", "")
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3, name
+
+
+def test_weighted_pagerank_releases_its_cache(spark, distributed):
+    """The distributed weighted pagerank and the personalized batch
+    cache their share table; neither leaves it behind."""
+    spark.catalog.clearCache()
+    nf = _local_kernel_frame(spark)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    nf.pagerank(n_iter=2, weight_col="weight").collect()
+    assert cache.isEmpty()
+    nf.pagerank_personalized_batch(["v01", "v02"], n_iter=2, weight_col="weight").collect()
+    assert cache.isEmpty()
 
 
 # ---------------------------------------------------------------------------

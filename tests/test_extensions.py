@@ -67,6 +67,18 @@ def test_pagerank_weighted(spark):
     assert pr[2] == pytest.approx(base + 0.85 * 0.25 / 3, abs=1e-6)
 
 
+def test_pagerank_matches_reference_loop_distributed(spark, letter_frame, distributed):
+    test_pagerank_matches_reference_loop(spark, letter_frame)
+
+
+def test_pagerank_sums_below_one_with_dangling_distributed(spark, letter_frame, distributed):
+    test_pagerank_sums_below_one_with_dangling(spark, letter_frame)
+
+
+def test_pagerank_weighted_distributed(spark, distributed):
+    test_pagerank_weighted(spark)
+
+
 # ---------------------------------------------------------------------------
 # triangle counts
 # ---------------------------------------------------------------------------

@@ -92,6 +92,17 @@ def test_weak_components_partition(spark, edge_list):
         assert len({labels[i] for i in comp}) == 1, f"split component {comp}"
 
 
+# The *_distributed twins rerun a property on the distributed loops
+# (guard forced to 0) with fewer examples: those loops cost seconds.
+_twin_settings = settings(_settings, max_examples=3)
+
+
+@given(edge_list=_edges)
+@_twin_settings
+def test_weak_components_partition_distributed(spark, distributed, edge_list):
+    test_weak_components_partition.hypothesis.inner_test(spark, edge_list)
+
+
 @given(edge_list=_edges)
 @_settings
 def test_k1_pairs_are_neighbors(spark, edge_list):
@@ -186,6 +197,12 @@ def test_pagerank_matches_python_loop(spark, edge_list):
         pr = {v: 0.15 / N_MAX + 0.85 * contrib[v] for v in range(N_MAX)}
     for v in range(N_MAX):
         assert abs(got[v] - pr[v]) < 5e-6, (v, got[v], pr[v])
+
+
+@given(edge_list=_edges)
+@_twin_settings
+def test_pagerank_matches_python_loop_distributed(spark, distributed, edge_list):
+    test_pagerank_matches_python_loop.hypothesis.inner_test(spark, edge_list)
 
 
 @given(
@@ -284,6 +301,12 @@ def test_k_core_matches_python_peel(spark, edge_list, k):
     nf = _frame(spark, edge_list)
     got = {r["id"]: r["core_degree"] for r in nf.k_core(k).collect()}
     assert got == _py_k_core(edge_list, k)
+
+
+@given(_edges, st.integers(1, 3))
+@_twin_settings
+def test_k_core_matches_python_peel_distributed(spark, distributed, edge_list, k):
+    test_k_core_matches_python_peel.hypothesis.inner_test(spark, edge_list, k)
 
 
 @given(_edges)

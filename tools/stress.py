@@ -45,7 +45,7 @@ def synthetic_graph(spark, n_nodes: int, n_edges: int) -> NetworkFrame:
 
 def scc_stress(n_nodes: int = 2_400_000, cycle_len: int = 1000) -> None:
     """Exercise the distributed Forward-Backward SCC path ABOVE the
-    driver-local Tarjan guard (algorithms._SCC_LOCAL_MAX_EDGES = 2M)
+    driver-local Tarjan guard (algorithms._LOCAL_MAX_EDGES = 2M)
     on a graph with known ground truth: ``n_nodes/cycle_len`` disjoint
     directed cycles (each one SCC, comp = min member = block start),
     plus block-pair DAG edges (2k -> 2k+1) so the peel loop runs >= 2
@@ -55,7 +55,7 @@ def scc_stress(n_nodes: int = 2_400_000, cycle_len: int = 1000) -> None:
     import numpy as np
 
     from networkframe_spark.algorithms import (
-        _SCC_LOCAL_MAX_EDGES,
+        _LOCAL_MAX_EDGES,
         _scc_local,
         _strong_component_min_labels,
     )
@@ -83,7 +83,7 @@ def scc_stress(n_nodes: int = 2_400_000, cycle_len: int = 1000) -> None:
     )
     nf = NetworkFrame(nodes, cyc.union(dag))
     n_edges = nf.edges.distinct().count()
-    assert n_edges > _SCC_LOCAL_MAX_EDGES, (
+    assert n_edges > _LOCAL_MAX_EDGES, (
         f"{n_edges} edges does not exceed the local guard — "
         "the distributed path would not be exercised"
     )
